@@ -229,6 +229,12 @@ def workload_for(name: str, scale: str) -> Workload:
     return wl
 
 
+def record_untraced(args, samples: list[dict]) -> None:
+    with open(HISTORY.format(args.workload, args.scale), "a") as f:
+        for s in samples:
+            f.write(json.dumps({"seed": args.seed, "run_s": s["run_s"]}) + "\n")
+
+
 def summary(values: list[float]) -> dict:
     return {"median": statistics.median(values), "max": max(values), "n": len(values)}
 
@@ -242,9 +248,7 @@ def timed(args, wl: Workload) -> tuple[dict, dict, int, int]:
     while not samples or time.perf_counter() - t0 < args.seconds:
         samples.append(crawl_once(args, wl, fx, None))
     failed = sum(1 for s in samples if s["problems"])
-    with open(HISTORY.format(args.workload, args.scale), "a") as f:
-        for s in samples:
-            f.write(json.dumps({"seed": args.seed, "run_s": s["run_s"]}) + "\n")
+    record_untraced(args, samples)
     med = {k: statistics.median(s[k] for s in samples) for k in END_TO_END if k in samples[0]}
     # set-up from scratch: a cache hit adds the generation and oracle
     # times recorded with the fixture, so setup_s does not depend on
@@ -282,7 +286,9 @@ def traced(args, wl: Workload, queries: list[str]) -> tuple[dict, dict, int, int
             untraced = [json.loads(line)["run_s"] for line in f][-RECENT:]
     except FileNotFoundError:
         # no timed run in this checkout yet: measure one untraced crawl
+        # (kept in the history, so this happens once per workload)
         samples.append(crawl_once(args, wl, fx, None))
+        record_untraced(args, samples)
         untraced = [samples[0]["run_s"]]
     run_id = uuid.uuid4().hex[:12]
     tr = crawl_once(args, wl, fx, run_id, (tables_dir, queries))
