@@ -32,6 +32,7 @@ Layout (the design that survives 10^10 seen URLs):
   * cogrouped probe (the 12-GiB design point): candidates co-partition
     with the stored shard rows on the shard key, so each task holds ONE
     shard's bitmap and only candidates move.
+  :meth:`BloomStore.tag_maybe` picks between them by bitmap size.
 - Capacity: ``m = 16n`` bits for the EXPECTED key count with headroom;
   when the live count outgrows it (fpr would degrade), the store
   schedules a full distributed rebuild at double capacity — amortized
@@ -47,6 +48,7 @@ import glob
 import json
 import os
 import shutil
+import uuid
 
 import numpy as np
 import pandas as pd
@@ -56,7 +58,7 @@ from pyspark.sql import types as T
 
 _K = 7  # probes; with m = 16n bits → fpr ≈ 0.6%
 DEFAULT_SHARDS = 32
-# above this total bitmap size the round loop switches from the
+# above this total bitmap size tag_maybe switches from the
 # worker-sideload probe to the cogrouped probe (bytes)
 SIDELOAD_MAX_BYTES = 256 << 20
 
@@ -76,14 +78,16 @@ def _shard_of(h: np.ndarray, num_shards: int) -> np.ndarray:
     return (h.astype(np.int64) % num_shards + num_shards) % num_shards
 
 
-# Worker-side cache of assembled bitmaps, keyed by version directory.
-# Version dirs are immutable once the meta pointer names them, so a hit
-# never goes stale; old versions are evicted to bound worker memory.
-_SIDELOAD_CACHE: dict[str, np.ndarray] = {}
+# Worker-side cache of assembled bitmaps, keyed by (store id, version
+# directory). Version dirs are immutable once the meta pointer names
+# them, and the store id changes whenever a store's state starts over
+# (a deleted and recreated state dir reuses the same version paths), so
+# a hit never goes stale; old versions are evicted to bound worker memory.
+_SIDELOAD_CACHE: dict[tuple[str, str], np.ndarray] = {}
 
 
-def _sideload_bits(path: str, num_shards: int, n_bytes: int) -> np.ndarray:
-    bits = _SIDELOAD_CACHE.get(path)
+def _sideload_bits(uid: str, path: str, num_shards: int, n_bytes: int) -> np.ndarray:
+    bits = _SIDELOAD_CACHE.get((uid, path))
     if bits is None:
         bits = np.zeros(num_shards * n_bytes, dtype=np.uint8)
         for f in sorted(glob.glob(os.path.join(path, "*.parquet"))):
@@ -96,7 +100,7 @@ def _sideload_bits(path: str, num_shards: int, n_bytes: int) -> np.ndarray:
                     bits[s * n_bytes : s * n_bytes + len(arr)] = arr
         if len(_SIDELOAD_CACHE) >= 4:
             _SIDELOAD_CACHE.clear()
-        _SIDELOAD_CACHE[path] = bits
+        _SIDELOAD_CACHE[(uid, path)] = bits
     return bits
 
 
@@ -130,6 +134,7 @@ class BloomStore:
         self.n_keys = 0
         self.round_id = -1
         self.version = -1
+        self.uid = uuid.uuid4().hex  # replaced by the persisted id, if any
         os.makedirs(root, exist_ok=True)
         self._load()
 
@@ -157,6 +162,7 @@ class BloomStore:
             self.version = meta.get("version", -1)
             if self.version >= 0 and not os.path.isdir(self._version_dir(self.version)):
                 raise FileNotFoundError(self._version_dir(self.version))
+            self.uid = meta.get("uid", self.uid)
         except (OSError, ValueError, KeyError, FileNotFoundError):
             # corrupt/partial state (crash mid-write): discard; the
             # crawl driver falls back to one distributed rebuild
@@ -178,6 +184,7 @@ class BloomStore:
                     "n_keys": self.n_keys,
                     "round_id": self.round_id,
                     "version": self.version,
+                    "uid": self.uid,
                 },
                 f,
             )
@@ -271,25 +278,33 @@ class BloomStore:
         self._commit_meta()
 
     # ------------------------------------------------------------ probe
-    def might_contain_udf(self, spark=None):
+    def tag_maybe(self, candidates: DataFrame, key_col: str) -> DataFrame:
+        """``candidates`` with a ``__maybe`` boolean appended: False means
+        ``key_col`` is definitely not in the set. Probes through the
+        worker sideload while the bloom fits executor memory
+        (``total_bytes() <= SIDELOAD_MAX_BYTES``), cogrouped past it."""
+        if self.total_bytes() <= SIDELOAD_MAX_BYTES:
+            probe = self.might_contain_udf()
+            return candidates.withColumn("__maybe", probe(F.xxhash64(key_col)))
+        return self.probe_cogrouped(candidates, key_col)
+
+    def might_contain_udf(self):
         """Vectorized membership probe over an int64 hash column.
 
         Sideload mode: each PYTHON WORKER reads the current version's
         shard files from shared storage once and caches the assembled
-        bitmap — the driver ships only the path string. Used while the
-        bloom fits executor memory (``total_bytes() <=
-        SIDELOAD_MAX_BYTES``); past that the round loop switches to
-        :meth:`probe_cogrouped`."""
+        bitmap — the driver ships only the path string and store id."""
         path = self.shards_path
         if path is None:
             raise ValueError("bloom has no committed version yet")
+        uid = self.uid
         mask = self.m_shard_bits - 1
         n_bytes = self.m_shard_bits // 8
         B = self.num_shards
 
         @F.pandas_udf(T.BooleanType())
         def might_contain(h: pd.Series) -> pd.Series:
-            bm = _sideload_bits(path, B, n_bytes)
+            bm = _sideload_bits(uid, path, B, n_bytes)
             hv = h.to_numpy(dtype=np.int64).astype(np.uint64)
             base = _shard_of(hv, B).astype(np.uint64) * n_bytes
             out = np.ones(len(hv), dtype=bool)
@@ -311,9 +326,11 @@ class BloomStore:
         if self.shards_path is None:
             raise ValueError("bloom has no committed version yet")
         shards_df = spark.read.parquet(self.shards_path).select("shard", "bm")
-        tagged = candidates.withColumn(
-            "__h", F.xxhash64(hash_col)
-        ).withColumn("shard", F.pmod(F.col("__h"), F.lit(self.num_shards)))
+        # the shard key must be int on both sides: cogroup co-partitions
+        # by hash, and a bigint key hashes apart from the stored int one
+        tagged = candidates.withColumn("__h", F.xxhash64(hash_col)).withColumn(
+            "shard", F.pmod(F.col("__h"), F.lit(self.num_shards)).cast("int")
+        )
         out_schema = T.StructType(
             [f for f in tagged.schema.fields if f.name != "shard"]
             + [T.StructField("__maybe", T.BooleanType())]
@@ -344,88 +361,29 @@ class BloomStore:
         )
 
 
-# --------------------------------------------------------------- legacy API
-
-
-def build_bloom(seen: DataFrame, key_col: str, n_keys: int | None = None) -> tuple[bytes, int]:
-    """One-shot (unsharded) bloom build — kept for standalone anti-join
-    use outside a crawl loop; the crawl driver itself maintains a
-    :class:`BloomStore` incrementally."""
-    n = n_keys if n_keys is not None else seen.count()
-    m_bits = _next_pow2(max(1024, 16 * max(n, 1)))
-    mask = m_bits - 1
-    n_bytes = m_bits // 8
-
-    hashes = seen.select(F.xxhash64(key_col).alias("h"))
-
-    def part_bloom(it):
-        bm = np.zeros(n_bytes, dtype=np.uint8)
-        for pdf in it:
-            h = pdf["h"].to_numpy(dtype=np.int64).astype(np.uint64)
-            for pos in _probe_positions(h, mask):
-                np.bitwise_or.at(bm, pos >> 3, (1 << (pos & 7)).astype(np.uint8))
-        yield pd.DataFrame({"bloom": [bm.tobytes()]})
-
-    parts = hashes.mapInPandas(part_bloom, schema="bloom binary").collect()
-    acc = np.zeros(n_bytes, dtype=np.uint8)
-    for row in parts:
-        acc |= np.frombuffer(row["bloom"], dtype=np.uint8)
-    return acc.tobytes(), mask
-
-
-def bloom_might_contain_udf(spark, bloom_bytes: bytes, mask: int):
-    """Vectorized membership probe over an int64 hash column.
-
-    The bitmap ships inside the UDF closure, NOT as an explicit
-    SparkContext broadcast: an unmanaged broadcast per call leaks one
-    bitmap per round on driver and executors (ADVICE r2). One-shot
-    blooms here are small by construction (the round loop's large,
-    incremental bloom lives in :class:`BloomStore`, which sideloads
-    from shared storage), so closure shipping costs one serialization
-    per stage and nothing persists after the job."""
-
-    @F.pandas_udf(T.BooleanType())
-    def might_contain(h: pd.Series) -> pd.Series:
-        bm = np.frombuffer(bloom_bytes, dtype=np.uint8)
-        hv = h.to_numpy(dtype=np.int64).astype(np.uint64)
-        out = np.ones(len(hv), dtype=bool)
-        for pos in _probe_positions(hv, mask):
-            out &= (bm[pos >> 3] & (1 << (pos & 7)).astype(np.uint8)) != 0
-        return pd.Series(out)
-
-    return might_contain
-
-
 def seen_anti_join(
     candidates: DataFrame,
     url_seen: DataFrame,
     keys: list[str],
     hash_key: str,
-    use_bloom: bool = True,
-    n_keys: int | None = None,
+    bloom: BloomStore | None = None,
     scratch: list | None = None,
-    probe_udf=None,
-    probe_fn=None,
     confirm_parts: tuple[DataFrame, DataFrame | None] | None = None,
 ) -> DataFrame:
     """candidates ∖ url_seen on ``keys`` (J3 left_anti), with the bloom
     short-circuit for definitely-new rows.
 
-    ``probe_udf``: a prebuilt membership probe (from
-    :meth:`BloomStore.might_contain_udf`) — the crawl driver passes its
-    incrementally-maintained bloom so no per-round rebuild happens
-    here. ``probe_fn``: alternative whole-DataFrame tagger
-    (:meth:`BloomStore.probe_cogrouped`-style, df → df + ``__maybe``)
-    for blooms too large to sideload. Without either, falls back to a
-    one-shot build (standalone use).
+    ``bloom``: a committed :class:`BloomStore` over ``url_seen``'s
+    ``hash_key`` hashes (the crawl driver's incrementally-maintained
+    one); rows it rules out skip the exact anti-join. ``None`` runs the
+    exact anti-join alone.
 
     ``confirm_parts``: optional (base, delta) split of the SAME seen
     set for the exact-confirm phase — anti-join vs (base ∪ delta) ≡
     anti-join vs base then vs delta, and when ``base`` is a
     catalog-bucketed table (``sources/bucketed.py``) its side of the
     join plans WITHOUT an Exchange (only the small maybe-side
-    shuffles). ``url_seen`` must still be the full set (it feeds the
-    one-shot bloom fallback).
+    shuffles). ``url_seen`` is then unused.
     """
 
     def _keyed(df: DataFrame) -> DataFrame:
@@ -445,19 +403,11 @@ def seen_anti_join(
             out = out.join(_keyed(delta), cond, "left_anti")
         return out
 
-    if not use_bloom:
+    if bloom is None:
         return _confirm(candidates)
 
-    if probe_fn is not None:
-        tagged = probe_fn(candidates)
-    else:
-        if probe_udf is None:
-            bloom_bytes, mask = build_bloom(url_seen, hash_key, n_keys=n_keys)
-            probe_udf = bloom_might_contain_udf(
-                candidates.sparkSession, bloom_bytes, mask
-            )
-        tagged = candidates.withColumn("__maybe", probe_udf(F.xxhash64(hash_key)))
-    tagged = tagged.persist()  # reused for both branches (columnar cache)
+    # reused for both branches (columnar cache)
+    tagged = bloom.tag_maybe(candidates, hash_key).persist()
     if scratch is not None:
         scratch.append(tagged)
     definitely_new = tagged.filter(~F.col("__maybe")).drop("__maybe")

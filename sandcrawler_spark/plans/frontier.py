@@ -30,22 +30,14 @@ matches the single-threaded oracle byte-for-byte.
 from __future__ import annotations
 
 import hashlib
-import os
-import sys
-import time
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
-_TRACE = bool(os.environ.get("SPARK_GRAFT_TRACE"))
-
-
-def _trace(label: str, t0: float) -> None:
-    if _TRACE:
-        print(f"[trace] {label}: {time.perf_counter() - t0:.2f}s", file=sys.stderr)
-
 from sandcrawler_spark.functions.urlkeys import canonical_url_udf, resolve_url_udf
+from sandcrawler_spark.operators.bloom import BloomStore, seen_anti_join
 from sandcrawler_spark.operators.ranking import with_global_rank
 from sandcrawler_spark.plans import schemas as S
 from sandcrawler_spark.plans.state import SnapshotStore
@@ -55,12 +47,6 @@ SALT_BUCKETS = 8
 # token-bucket politeness: bucket capacity = CAP_MULT × per-round refill
 # (the robots host_budget); refill happens once per scheduling round
 TOKEN_BUCKET_CAP_MULT = 2
-# robots-rules join strategy cutover: up to this many deduped rule rows
-# the rules side is broadcast (one hash map per executor, zero shuffle);
-# above it — e.g. 10^8 hosts at the 10^10-URL design point — the join
-# falls back to a shuffle join on host, where AQE's skew-join splitting
-# defuses hot-host partitions (politeness salting happens downstream)
-RULES_BROADCAST_MAX = 4_000_000
 
 def _fetch_order_cols():
     """Total fetch-priority order (north_rule heap keys + URL totality).
@@ -171,12 +157,7 @@ def _politeness_select(candidates: DataFrame, budget_col: str = "host_budget") -
     ≤ budget·S rows within host. The per-salt survivors are a superset of
     the true per-host top-budget, so the result is exact while no single
     task ever sorts a whole hot host's frontier."""
-    order = [
-        F.col("priority").asc(),
-        F.col("depth").asc(),
-        F.col("citation_priority").desc(),
-        F.col("canonical_url").asc(),
-    ]
+    order = _fetch_order_cols()
     salted = candidates.withColumn(
         "__salt", F.pmod(F.xxhash64("canonical_url"), F.lit(SALT_BUCKETS))
     )
@@ -228,18 +209,23 @@ def _best_capture(fetch: DataFrame, captures: DataFrame) -> DataFrame:
     joined = fetch.withColumn("best_mimetype", best_mime).join(
         cap, fetch.canonical_url == cap.cap_url, "left"
     )
+    def flag(cond, if_null: bool):
+        # priority.capture_rank_key's Python truthiness: a NULL operand
+        # gives a definite 0/1, never a NULL that desc would rank last
+        return F.coalesce(cond, F.lit(if_null)).cast("int").desc()
+
     # ia.py:371-390 tuple, descending preference
     w = Window.partitionBy("ingest_type", "canonical_url").orderBy(
         (F.col("cap_url") == F.col("canonical_url")).cast("int").desc(),
-        F.col("cap_status").isin(200, 226).cast("int").desc(),
+        flag(F.col("cap_status").isin(200, 226), False),
         (F.lit(0) - F.coalesce("cap_status", F.lit(999))).desc(),
-        (F.col("cap_mime") == F.col("best_mimetype")).cast("int").desc(),
-        (F.col("cap_mime") != F.lit("warc/revisit")).cast("int").desc(),
+        flag(F.col("cap_mime") == F.col("best_mimetype"), False),
+        flag(F.col("cap_mime") != F.lit("warc/revisit"), True),
         F.lit(0).desc(),  # closest_dt year match: batch mode has no 'closest' target
         # try_cast: a malformed (non-digit / overflowing) capture datetime
         # must rank worst under ANSI mode, not throw — desc puts nulls last
         F.col("cap_dt").try_cast("long").desc(),
-        F.col("cap_warc_path").contains("/").cast("int").desc(),
+        flag(F.col("cap_warc_path").contains("/"), False),
         F.col("cap_sha1hex").desc(),
     )
     return (
@@ -353,11 +339,8 @@ def _new_candidates(
     url_seen: DataFrame,
     generation: int = 0,
     has_forced: bool = True,
-    use_bloom: bool = True,
-    seen_count: int | None = None,
+    bloom: BloomStore | None = None,
     scratch: list | None = None,
-    probe_udf=None,
-    probe_fn=None,
     confirm_parts: tuple[DataFrame, DataFrame | None] | None = None,
 ) -> DataFrame:
     """Drop candidates already processed: the URL-seen anti-join with
@@ -378,8 +361,6 @@ def _new_candidates(
     definition means compaction provably removes exactly the rows the
     next round's filter would have removed anyway (digest neutrality).
     """
-    from sandcrawler_spark.operators.bloom import seen_anti_join
-
     unforced = (
         candidates.filter(~F.col("force_recrawl")) if has_forced else candidates
     )
@@ -388,11 +369,8 @@ def _new_candidates(
         url_seen,
         keys=["ingest_type", "canonical_url"],
         hash_key="canonical_url",
-        use_bloom=use_bloom,
-        n_keys=seen_count,  # from manifest counters: saves a count job
+        bloom=bloom,  # incrementally-maintained sharded bloom
         scratch=scratch,
-        probe_udf=probe_udf,  # incrementally-maintained sharded bloom
-        probe_fn=probe_fn,  # cogrouped probe once past sideload size
         confirm_parts=confirm_parts,  # bucketed base + plain deltas
     )
     if not has_forced:
@@ -438,16 +416,12 @@ def run_round(
     docs: DataFrame,
     round_id: int,
     default_budget: int = DEFAULT_BUDGET,
-    use_bloom: bool = True,
-    seen_count: int | None = None,
+    bloom: BloomStore | None = None,
     scratch: list | None = None,
     generation: int = 0,
-    probe_udf=None,
-    probe_fn=None,
     has_forced: bool = True,
     host_tokens: DataFrame | None = None,
     prepared_rules: DataFrame | None = None,
-    rules_broadcastable: bool = True,
     max_retries: int = 0,
     seen_confirm_parts: tuple[DataFrame, DataFrame | None] | None = None,
 ) -> RoundResult:
@@ -467,23 +441,18 @@ def run_round(
             url_seen,
             generation=generation,
             has_forced=has_forced,
-            use_bloom=use_bloom,
-            seen_count=seen_count,
+            bloom=bloom,
             scratch=scratch,
-            probe_udf=probe_udf,
-            probe_fn=probe_fn,
             confirm_parts=seen_confirm_parts,
         )
 
-    # --- robots / blocklist / budget (F6/J1). Small rules side →
-    # broadcast; a rules table past RULES_BROADCAST_MAX (the 10^8-host
-    # design point) shuffle-joins on host instead, with AQE skew-join
-    # splitting the hot-host partitions.
+    # --- robots / blocklist / budget (F6/J1). Spark's size estimate
+    # picks the join: a rules table under autoBroadcastJoinThreshold
+    # broadcasts, a larger one (the 10^8-host design point) shuffle-joins
+    # on host; politeness salting downstream handles hot hosts either way.
     rules = (
         prepared_rules if prepared_rules is not None else _dedup_rules(robots)
     ).withColumnRenamed("host", "r_host")
-    if rules_broadcastable:
-        rules = F.broadcast(rules)
     candidates = candidates.join(rules, F.col("host") == F.col("r_host"), "left").drop(
         "r_host"
     )
@@ -511,8 +480,6 @@ def run_round(
     # table maintained by run_crawl; hosts never seen before start full.
     if host_tokens is not None:
         tok = host_tokens.select(F.col("host").alias("t_host"), "tokens")
-        if rules_broadcastable:  # hosts state is bounded by rule cardinality
-            tok = F.broadcast(tok)
         candidates = candidates.join(
             tok, F.col("host") == F.col("t_host"), "left"
         ).drop("t_host")
@@ -726,10 +693,7 @@ def _compact_frontier(
     spark: SparkSession,
     store: SnapshotStore,
     round_id: int,
-    probe_udf,
-    probe_fn,
-    use_bloom: bool,
-    seen_count: int | None,
+    bloom: BloomStore | None,
 ) -> None:
     """Rewrite the accumulated frontier sources as ONE base table of
     still-active candidates, so the next rounds' candidate scan is
@@ -738,13 +702,11 @@ def _compact_frontier(
 
     Digest-neutral by construction: unforced rows removed here are
     exactly the rows the per-round URL-seen filter (the same
-    ``seen_anti_join``) would remove anyway, ``_dedup_candidates`` is
+    ``_new_candidates``) would remove anyway, ``_dedup_candidates`` is
     associative over unions, and force_recrawl rows are kept
     UNCONDITIONALLY — they stay dormant while their generation matches
     but re-arm when a re-ingest bumps the generation, exactly as under
     append-only assembly."""
-    from sandcrawler_spark.operators.bloom import seen_anti_join
-
     frontier, _ = _assemble_frontier(spark, store, upto_round=round_id)
     if frontier is None:
         return
@@ -754,16 +716,8 @@ def _compact_frontier(
     has_forced = store.forced_seeds > 0
     if url_seen is not None:
         unforced = cand.filter(~F.col("force_recrawl")) if has_forced else cand
-        kept = seen_anti_join(
-            unforced,
-            url_seen,
-            keys=["ingest_type", "canonical_url"],
-            hash_key="canonical_url",
-            use_bloom=use_bloom,
-            n_keys=seen_count,
-            scratch=scratch,
-            probe_udf=probe_udf,
-            probe_fn=probe_fn,
+        kept = _new_candidates(
+            unforced, url_seen, has_forced=False, bloom=bloom, scratch=scratch
         )
         if has_forced:
             kept = kept.unionByName(cand.filter(F.col("force_recrawl")))
@@ -788,13 +742,20 @@ def run_crawl(
     use_bloom: bool = True,
     resume: bool = False,
     token_bucket: bool = False,
-    rules_broadcast_max: int = RULES_BROADCAST_MAX,
     compact_factor: float | None = 2.0,
     compact_min_rows: int = 50_000,
     max_retries: int = 0,
     bucketed_seen: bool = False,
 ) -> SnapshotStore:
     """Multi-round crawl driver with snapshot commit + exact resume.
+
+    The rounds run with AQE off, so every join strategy is fixed at
+    plan time from Spark's size estimates: the robots rules and the
+    hosts token state broadcast while they fit under
+    ``spark.sql.autoBroadcastJoinThreshold`` and shuffle-join on host
+    past it. ``use_bloom=True`` keeps a sharded :class:`BloomStore`
+    under the state dir as the URL-seen prefilter; the store itself
+    picks its probe form.
 
     ``bucketed_seen=True`` periodically folds the accumulated url_seen
     deltas into ONE catalog-bucketed base table (bucketed+sorted by the
@@ -829,34 +790,22 @@ def run_crawl(
     retry_horizon counter). Default 0 preserves the historical
     terminal-bad semantics byte-for-byte. Mirrored by the oracle.
     """
-    from sandcrawler_spark.operators.bloom import BloomStore
-
     store = SnapshotStore(state_dir, spark)
     bloom = BloomStore(store.aux_path("bloom")) if use_bloom else None
     parallelism = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    # Rules are static across rounds: dedup ONCE and cache; the first
+    # round's job fills the cache.
+    robots = spark.read.parquet(f"{data_dir}/robots.parquet")
+    rules_tbl = _dedup_rules(robots)
     # AQE off for the scheduling rounds: shuffle partitions are already
     # sized explicitly, and AQE's per-shuffle-stage re-planning adds
     # DRIVER latency comparable to sandbox-scale stage runtimes (4M-URL
-    # crawl: 35.6s → 27.8s at 16 cores). At the 10^10 design point the
-    # stages are minutes long and AQE (esp. skew-join splitting) earns
-    # its planning cost — re-enable via spark-defaults there.
+    # crawl: 35.6s → 27.8s at 16 cores). The session's setting is
+    # restored when the crawl returns.
     aqe_prev = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
+    rules_tbl.persist()
     try:
-        robots = spark.read.parquet(f"{data_dir}/robots.parquet")
-        # Rules are static across rounds: dedup ONCE, cache, and decide
-        # the join strategy from the actual cardinality (the one count
-        # action here replaces a per-round dedup recompute). The count
-        # is submitted on a thread and resolved right before the first
-        # run_round, so it OVERLAPS the round-0 seed canonicalization
-        # job instead of serializing ahead of it.
-        from concurrent.futures import ThreadPoolExecutor
-
-        t_rules = time.perf_counter()
-        rules_tbl = _dedup_rules(robots).persist()
-        _rules_pool = ThreadPoolExecutor(max_workers=1)
-        _rules_future = _rules_pool.submit(rules_tbl.count)
-        rules_broadcastable: bool | None = None  # resolved lazily below
         # pre-partition the per-round join sides ON their join keys and keep
         # them cached: every round's best-capture/outlink join then reuses the
         # exchange instead of re-shuffling the big side (bucketed-table shape)
@@ -879,6 +828,14 @@ def run_crawl(
             rc = store.counters().get(str(round_id), {})
             return rc.get(key, default)
 
+        def _outgrown(added: int, base: int) -> bool:
+            # compaction trigger shared by the frontier and url_seen bases
+            return (
+                compact_factor is not None
+                and added >= compact_min_rows
+                and added > compact_factor * max(base, 1)
+            )
+
         generation = store.generation
 
         for round_id in range(start_round, max_rounds):
@@ -886,7 +843,6 @@ def run_crawl(
             # all additions discovered in rounds < r; processed keys fall out
             # through the url_seen anti-join (no full-frontier rewrite per
             # round — the Iceberg-native layout).
-            t_prep = time.perf_counter()
             if round_id == 0:
                 frontier = prepare_seeds(spark.read.parquet(f"{data_dir}/seeds.parquet"))
                 seeds_path = store.aux_path("seeds_prepared")
@@ -900,7 +856,6 @@ def run_crawl(
                 store.note_seed_rows("seeds_prepared", int(obs_seeds.get["n"]))
                 frontier = spark.read.parquet(seeds_path)  # canonicalize ONCE
                 frontier_input_rows = int(obs_seeds.get["n"])
-                _trace(f"round {round_id} seeds prepare+write", t_prep)
             else:
                 stale = (
                     _c(round_id - 1, "scheduled") == 0
@@ -921,7 +876,6 @@ def run_crawl(
                 frontier, frontier_input_rows = _assemble_frontier(
                     spark, store, upto_round=round_id - 1
                 )
-                _trace(f"round {round_id} assemble frontier", t_prep)
             seen_parts = None
             sc = store.seen_compaction if bucketed_seen else None
             if sc is not None and sc["round"] <= round_id - 1:
@@ -948,9 +902,6 @@ def run_crawl(
             any_forced = any(_c(r, "forced", 0) for r in range(round_id))
             if url_seen is not None and any_forced:
                 url_seen = resolve_url_seen(url_seen)
-            seen_count = sum(
-                _c(r, "deduped", 0) for r in range(round_id)
-            ) or None
 
             # --- sharded incremental bloom: normally already up to date from
             # the previous round's delta update (no Spark job here at all).
@@ -959,21 +910,17 @@ def run_crawl(
             # url_seen DELTAS — O(missing deltas), not a full rebuild; the
             # full distributed rebuild remains only for capacity overflow or
             # absent/corrupt state (amortized O(log n) times per crawl).
-            probe_udf = None
-            probe_fn = None
-            if url_seen is not None and use_bloom:
+            if url_seen is not None and bloom is not None:
                 if bloom.needs_rebuild() or (
                     not bloom.ready_for(round_id) and bloom.version < 0
                 ):
-                    t0 = time.perf_counter()
+                    seen_count = sum(_c(r, "deduped", 0) for r in range(round_id))
                     bloom.rebuild(
                         url_seen.select(F.col("url_hash").alias("h")),
                         n_keys=seen_count or url_seen.count(),
                         round_id=round_id - 1,
                     )
-                    _trace(f"round {round_id} bloom rebuild", t0)
                 elif not bloom.ready_for(round_id):
-                    t0 = time.perf_counter()
                     for r in range(bloom.round_id + 1, round_id):
                         delta = store.read_round_table(r, "url_seen")
                         bloom.update(
@@ -981,42 +928,31 @@ def run_crawl(
                             n_delta=_c(r, "deduped", 0),
                             round_id=r,
                         )
-                    _trace(f"round {round_id} bloom catch-up", t0)
-                from sandcrawler_spark.operators.bloom import SIDELOAD_MAX_BYTES
-
-                if bloom.total_bytes() <= SIDELOAD_MAX_BYTES:
-                    probe_udf = bloom.might_contain_udf(spark)
-                else:
-                    probe_fn = lambda df: bloom.probe_cogrouped(df, "canonical_url")  # noqa: E731
 
             host_tokens = None
             if token_bucket:
+                # round 0's empty state is a local relation, so its size
+                # estimate is known (zero) and the join can broadcast
                 host_tokens = (
                     store.read_round_table(round_id - 1, "hosts")
                     if round_id > 0
-                    else spark.createDataFrame([], "host string, tokens int")
+                    else spark.sql(
+                        "select cast(null as string) host,"
+                        " cast(null as int) tokens where false"
+                    )
                 )
 
-            if rules_broadcastable is None:
-                rules_broadcastable = _rules_future.result() <= rules_broadcast_max
-                _rules_pool.shutdown(wait=False)
-                _trace("rules prep (dedup+count, overlapped)", t_rules)
-
             scratch: list[DataFrame] = []
-            t0 = time.perf_counter()
             rr = run_round(
                 spark, frontier, url_seen, robots, captures, docs,
-                round_id, default_budget, use_bloom, seen_count=seen_count,
+                round_id, default_budget, bloom=bloom,
                 scratch=scratch, generation=generation,
-                probe_udf=probe_udf, probe_fn=probe_fn,
                 has_forced=store.forced_seeds > 0,
                 host_tokens=host_tokens,
                 prepared_rules=rules_tbl,
-                rules_broadcastable=rules_broadcastable,
                 max_retries=max_retries,
                 seen_confirm_parts=seen_parts,
             )
-            _trace(f"round {round_id} run_round (rank job)", t0)
 
             # Counters (A7) + crawl-order digest ride the WRITE jobs as
             # Observations — zero extra actions per round.
@@ -1063,9 +999,7 @@ def run_crawl(
             # serialized its write against the other two. The explicit
             # materialize keeps exactly-once compute AND overlaps every
             # write — one less sequential barrier per round.)
-            t0 = time.perf_counter()
             rr.fetched.count()
-            _trace(f"round {round_id} materialize round caches", t0)
             writes = {"url_seen": seen_df, "frontier_add": frontier_df, "fetch_order": fetch_df}
             if token_bucket:
                 # next round's bucket state: tokens' = min(cap, tokens -
@@ -1077,8 +1011,6 @@ def run_crawl(
                 )
                 prev = host_tokens.withColumnRenamed("tokens", "__t")
                 budgets = rules_tbl.select("host", "host_budget")
-                if rules_broadcastable:
-                    budgets = F.broadcast(budgets)
                 universe = (
                     prev.select("host").unionByName(consumed.select("host")).distinct()
                 )
@@ -1103,8 +1035,6 @@ def run_crawl(
                     )
                 )
                 writes["hosts"] = hosts_df
-            t0 = time.perf_counter()
-            t_bloom = time.perf_counter()
             wpool = ThreadPoolExecutor(max_workers=len(writes) + 1)
             wfuts = {
                 n: wpool.submit(store.write_table, round_id, n, df)
@@ -1119,7 +1049,7 @@ def run_crawl(
             # ahead of the committed manifest only costs extra exact
             # checks, never correctness.
             bloom_future = None
-            if use_bloom:
+            if bloom is not None:
 
                 def _bloom_update():
                     wfuts["url_seen"].result()
@@ -1139,7 +1069,6 @@ def run_crawl(
                 # the pool (running threads drain, no new submissions)
                 wpool.shutdown(wait=False)
                 raise
-            _trace(f"round {round_id} write all tables (concurrent)", t0)
             seen_vals, fetch_vals, frontier_vals = obs_seen.get, obs_fetch.get, obs_frontier.get
             counters = {
                 f"status:{s}": int(seen_vals[s]) for s in S.ALL_STATUSES if seen_vals[s]
@@ -1157,121 +1086,65 @@ def run_crawl(
             counters["frontier_input_rows"] = frontier_input_rows
             if bloom_future is not None:
                 bloom_future.result()  # re-raises a failed bloom update
-                _trace(f"round {round_id} bloom delta update (overlapped)", t_bloom)
             wpool.shutdown(wait=False)
             store.commit_round(round_id, counters)
 
             # --- frontier compaction: when additions since the last base
             # outgrow it, fold sources into one active-only base table
-            if compact_factor is not None:
-                comp = store.compaction
-                comp_round = comp["round"] if comp else -1
-                adds_since = sum(
-                    _c(r, "frontier_rows", 0)
-                    for r in range(comp_round + 1, round_id + 1)
-                )
-                base_rows = comp["rows"] if comp else store.seed_rows
-                if adds_since >= compact_min_rows and adds_since > compact_factor * max(
-                    base_rows, 1
-                ):
-                    t0 = time.perf_counter()
-                    # fresh probe: the bloom now reflects this round too
-                    c_probe_udf = c_probe_fn = None
-                    if use_bloom and bloom.version >= 0:
-                        from sandcrawler_spark.operators.bloom import (
-                            SIDELOAD_MAX_BYTES,
-                        )
-
-                        if bloom.total_bytes() <= SIDELOAD_MAX_BYTES:
-                            c_probe_udf = bloom.might_contain_udf(spark)
-                        else:
-                            c_probe_fn = lambda df: bloom.probe_cogrouped(  # noqa: E731
-                                df, "canonical_url"
-                            )
-                    _compact_frontier(
-                        spark, store, round_id,
-                        probe_udf=c_probe_udf, probe_fn=c_probe_fn,
-                        use_bloom=use_bloom,
-                        seen_count=sum(
-                            _c(r, "deduped", 0) for r in range(round_id + 1)
-                        ) or None,
-                    )
-                    _trace(f"round {round_id} frontier compaction", t0)
+            # (the bloom probe now reflects this round too)
+            comp = store.compaction
+            comp_round = comp["round"] if comp else -1
+            adds_since = sum(
+                _c(r, "frontier_rows", 0) for r in range(comp_round + 1, round_id + 1)
+            )
+            if _outgrown(adds_since, comp["rows"] if comp else store.seed_rows):
+                _compact_frontier(spark, store, round_id, bloom)
 
             # --- url_seen bucketed compaction: fold deltas into a
-            # catalog-bucketed base when they outgrow it (same knobs as
+            # catalog-bucketed base when they outgrow it (same trigger as
             # frontier compaction). The base is the raw delta multiset —
             # union-equivalent forever, nothing resolved away.
-            if bucketed_seen and compact_factor is not None:
-                sc = store.seen_compaction
-                sc_round = sc["round"] if sc else -1
-                sc_rows = sc["rows"] if sc else 0
-                seen_since = sum(
-                    _c(r, "deduped", 0) for r in range(sc_round + 1, round_id + 1)
+            sc = store.seen_compaction
+            sc_round = sc["round"] if sc else -1
+            sc_rows = sc["rows"] if sc else 0
+            seen_since = sum(
+                _c(r, "deduped", 0) for r in range(sc_round + 1, round_id + 1)
+            )
+            if bucketed_seen and _outgrown(seen_since, sc_rows):
+                from sandcrawler_spark.sources.bucketed import (
+                    read_bucketed,
+                    write_bucketed,
                 )
-                if seen_since >= compact_min_rows and seen_since > compact_factor * max(
-                    sc_rows, 1
-                ):
-                    from sandcrawler_spark.sources.bucketed import (
-                        read_bucketed,
-                        write_bucketed,
-                    )
 
-                    t0 = time.perf_counter()
-                    delta = store.read_table(
-                        "url_seen", upto_round=round_id, from_round=sc_round + 1
-                    )
-                    full = (
-                        delta
-                        if sc is None
-                        else read_bucketed(
-                            spark, store.aux_path(sc["table"]), sc["catalog"]
-                        ).unionByName(delta)
-                    )
-                    name = f"seen_base_r{round_id:05d}"
-                    cat = "seen_base_{}_r{}".format(
-                        hashlib.md5(state_dir.encode()).hexdigest()[:8], round_id
-                    )
-                    write_bucketed(
-                        full,
-                        store.aux_path(name),
-                        cat,
-                        ["ingest_type", "canonical_url"],
-                        n_buckets=parallelism,
-                    )
-                    store.set_seen_compaction(
-                        round_id, name, cat, rows=sc_rows + seen_since
-                    )
-                    _trace(f"round {round_id} url_seen bucketed compaction", t0)
+                delta = store.read_table(
+                    "url_seen", upto_round=round_id, from_round=sc_round + 1
+                )
+                full = (
+                    delta
+                    if sc is None
+                    else read_bucketed(
+                        spark, store.aux_path(sc["table"]), sc["catalog"]
+                    ).unionByName(delta)
+                )
+                name = f"seen_base_r{round_id:05d}"
+                cat = "seen_base_{}_r{}".format(
+                    hashlib.md5(state_dir.encode()).hexdigest()[:8], round_id
+                )
+                write_bucketed(
+                    full,
+                    store.aux_path(name),
+                    cat,
+                    ["ingest_type", "canonical_url"],
+                    n_buckets=parallelism,
+                )
+                store.set_seen_compaction(
+                    round_id, name, cat, rows=sc_rows + seen_since
+                )
             for df in scratch:  # free this round's caches before the next
                 df.unpersist()
         return store
     finally:
-        try:
-            # if the crawl exited before the first rules-resolution
-            # point (stale-break on resume, start_round >= max_rounds),
-            # the background count future is still in flight — cancel
-            # it, and if it already started, wait it out (surfacing its
-            # error if any) BEFORE unpersisting the table under it.
-            # Best-effort only: the 120 s cap means a pathologically
-            # stuck count job can still see the unpersist race it —
-            # tolerated, Spark recomputes unpersisted partitions
-            # (ADVICE r5).
-            if rules_broadcastable is None and not _rules_future.cancel():
-                try:
-                    _rules_future.result(timeout=120)
-                except Exception:  # noqa: BLE001 — crawl result unaffected
-                    pass
-        except NameError:
-            pass
-        try:
-            rules_tbl.unpersist()
-        except NameError:
-            pass
-        try:
-            _rules_pool.shutdown(wait=False)  # no-op if already shut down
-        except NameError:
-            pass
+        rules_tbl.unpersist()
         spark.conf.set("spark.sql.adaptive.enabled", aqe_prev)
 
 

@@ -20,8 +20,6 @@ Two orderings matter:
 
 from __future__ import annotations
 
-SPARK_FETCH_ORDER_COLS = ["priority", "depth", "neg_citation", "canonical_url"]
-
 
 def fetch_sort_key(priority: int, depth: int, citation_priority: float, canonical_url: str):
     """Ascending sort key: lower tier first, shallower first, more-cited

@@ -26,10 +26,10 @@ def test_incremental_update_equals_rebuild(spark, tmp_path):
     # no false negatives on either build path
     members = _hashes(spark, 0, 3500)
     for st in (a, b):
-        probe = st.might_contain_udf(spark)
+        probe = st.might_contain_udf()
         n_hit = members.select(probe(F.col("h")).alias("m")).filter("m").count()
         assert n_hit == 3500
-    probe_a = a.might_contain_udf(spark)
+    probe_a = a.might_contain_udf()
 
     # false-positive rate bounded on non-members
     others = _hashes(spark, 10_000_000, 4000)
@@ -46,7 +46,7 @@ def test_broadcast_probe_equals_cogrouped_probe(spark, tmp_path):
     cand = spark.range(0, 6000).select(
         F.col("id").cast("string").alias("url"), F.col("id").alias("seq")
     )
-    probe = st.might_contain_udf(spark)
+    probe = st.might_contain_udf()
     bc = {
         r["url"]: r["m"]
         for r in cand.select(
@@ -68,7 +68,7 @@ def test_persistence_roundtrip(spark, tmp_path):
     re = BloomStore(p)
     assert re.num_shards == 4
     assert re.ready_for(1)
-    probe = re.might_contain_udf(spark)
+    probe = re.might_contain_udf()
     n = (
         _hashes(spark, 0, 1000)
         .select(probe(F.col("h")).alias("m"))
@@ -98,7 +98,7 @@ def test_corrupt_state_falls_back_to_rebuild(spark, tmp_path):
     st2 = BloomStore(root, num_shards=4)
     assert st2.version == -1 and not st2.ready_for(1)
     st2.rebuild(_hashes(spark, 0, 1000), n_keys=1000, round_id=0)
-    probe = st2.might_contain_udf(spark)
+    probe = st2.might_contain_udf()
     assert (
         _hashes(spark, 0, 1000).select(probe(F.col("h")).alias("m")).filter("m").count()
         == 1000
@@ -111,3 +111,25 @@ def test_corrupt_state_falls_back_to_rebuild(spark, tmp_path):
         json.dump(meta, f)
     st3 = BloomStore(root, num_shards=4)
     assert st3.version == -1 and not st3.ready_for(1)
+
+
+def test_store_id_survives_reopen_not_recreation(spark, tmp_path):
+    """The store id keys the workers' sideload cache: a reopened store
+    keeps it, while a deleted and recreated store dir gets a new one
+    (its version paths repeat, its bitmaps do not)."""
+    import shutil
+
+    root = str(tmp_path / "u")
+    st = BloomStore(root, num_shards=4)
+    st.update(_hashes(spark, 0, 1000), n_delta=1000, round_id=0)
+    assert BloomStore(root).uid == st.uid
+
+    shutil.rmtree(root)
+    st2 = BloomStore(root, num_shards=4)
+    st2.update(_hashes(spark, 5000, 1000), n_delta=1000, round_id=0)
+    assert st2.shards_path == st.shards_path and st2.uid != st.uid
+    probe = st2.might_contain_udf()
+    assert (
+        _hashes(spark, 5000, 1000).select(probe(F.col("h")).alias("m")).filter("m").count()
+        == 1000
+    )

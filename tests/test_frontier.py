@@ -124,12 +124,19 @@ def test_resume_after_torn_uncommitted_writes(spark, fixture_dir, tmp_path):
     assert _spark_seen(full) == _spark_seen(part)
 
 
-def test_no_bloom_same_result(spark, fixture_dir, tmp_path):
-    """Bloom is a prefilter only — disabling it must not change results."""
+def test_no_bloom_same_result(spark, fixture_dir, tmp_path, monkeypatch):
+    """Bloom is a prefilter only — disabling it must not change results,
+    whichever probe form (sideload or cogrouped) the store picks."""
+    from sandcrawler_spark.operators import bloom
+
     with_b = run_crawl(spark, fixture_dir, str(tmp_path / "b1"), max_rounds=2, use_bloom=True)
     no_b = run_crawl(spark, fixture_dir, str(tmp_path / "b0"), max_rounds=2, use_bloom=False)
     assert _spark_orders(with_b) == _spark_orders(no_b)
     assert _spark_seen(with_b) == _spark_seen(no_b)
+    monkeypatch.setattr(bloom, "SIDELOAD_MAX_BYTES", 0)
+    cogrouped = run_crawl(spark, fixture_dir, str(tmp_path / "b2"), max_rounds=2)
+    assert _spark_orders(cogrouped) == _spark_orders(no_b)
+    assert _spark_seen(cogrouped) == _spark_seen(no_b)
 
 
 def test_compaction_digest_neutral_and_bounded_input(spark, fixture_dir, tmp_path):
@@ -218,3 +225,67 @@ def test_bucketed_seen_digest_neutral_and_resume(spark, fixture_dir, tmp_path):
     )
     assert _spark_orders(part) == _spark_orders(plain)
     assert _spark_seen(part) == _spark_seen(plain)
+
+
+def test_recrawl_into_recreated_state_dir(spark, fixture_dir, tmp_path):
+    """A state dir deleted and recreated within one driver must crawl
+    exactly like a fresh path: the bloom probe may not reuse bitmaps
+    the Python workers cached for the earlier crawl's store."""
+    import shutil
+
+    other = str(tmp_path / "other_data")
+    gen_frontier(other, n_urls=800, n_hosts=25, n_seeds=200, seed=8)
+    reused = str(tmp_path / "reused")
+    run_crawl(spark, other, reused, max_rounds=2)
+    shutil.rmtree(reused)
+    again = run_crawl(spark, fixture_dir, reused, max_rounds=2)
+    fresh = run_crawl(spark, fixture_dir, str(tmp_path / "fresh"), max_rounds=2)
+    assert again.counters() == fresh.counters()
+    assert _spark_seen(again) == _spark_seen(fresh)
+
+
+def test_best_capture_null_fields_match_capture_rank_key(spark):
+    """NULL status, mimetype and warc_path rank exactly as in
+    priority.capture_rank_key (the oracle's ranking), not NULLS LAST."""
+    import random
+
+    from sandcrawler_spark.plans.frontier import _best_capture
+    from sandcrawler_spark.plans.priority import capture_rank_key
+
+    best = {"pdf": "application/pdf", "html": "text/html"}
+    rng = random.Random(11)
+    fetch, caps = [], []
+    for i in range(60):
+        itype = "pdf" if i % 2 else "html"
+        url = f"http://h{i % 5}.example/p{i}"
+        fetch.append((itype, url))
+        for j in range(rng.randint(2, 6)):
+            caps.append((
+                url,
+                rng.choice(["20200101000000", "20210101000000"]),
+                rng.choice([None, best[itype], "text/plain", "warc/revisit"]),
+                rng.choice([None, 200, 226, 404, 302]),
+                f"{i:03d}{j}",
+                rng.choice([None, "a/b.warc.gz", "b.warc.gz"]),
+                None,
+            ))
+    fetch_df = spark.createDataFrame(fetch, "ingest_type string, canonical_url string")
+    caps_df = spark.createDataFrame(
+        caps,
+        "url string, datetime string, mimetype string, status_code int, "
+        "sha1hex string, warc_path string, location string",
+    )
+    got = {
+        r["canonical_url"]: r["cap_sha1hex"]
+        for r in _best_capture(fetch_df, caps_df).collect()
+    }
+    want = {}
+    for itype, url in fetch:
+        mine = [c for c in caps if c[0] == url]
+        want[url] = max(
+            mine,
+            key=lambda c: capture_rank_key(
+                c[0], url, c[3], c[2], best[itype], c[1], c[5], c[4]
+            ),
+        )[4]
+    assert got == want

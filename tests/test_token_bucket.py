@@ -4,6 +4,8 @@ semantics vs the flat budget, and state-table persistence."""
 
 from __future__ import annotations
 
+import re
+
 from sandcrawler_spark.plans.datagen import gen_frontier
 from sandcrawler_spark.plans.frontier import run_crawl
 from sandcrawler_spark.plans.oracle import run_oracle
@@ -54,15 +56,40 @@ def test_bucket_bursts_then_throttles(spark, tmp_path):
         assert 0 <= row["tokens"] <= cap, row
 
 
+def _rules_joins(spark, d):
+    """Physical join operators planned for the robots-rules join of one
+    scheduling round over fixture ``d``."""
+    from sandcrawler_spark.plans.frontier import prepare_seeds, run_round
+
+    rr = run_round(
+        spark,
+        prepare_seeds(spark.read.parquet(f"{d}/seeds.parquet")),
+        None,
+        spark.read.parquet(f"{d}/robots.parquet"),
+        spark.read.parquet(f"{d}/capture_history.parquet"),
+        spark.read.parquet(f"{d}/docs.parquet"),
+        0,
+    )
+    plan = rr.url_seen_delta._jdf.queryExecution().executedPlan().toString()
+    return set(re.findall(r"(\w+Join) \[host#\d+\], \[r_host#\d+\]", plan))
+
+
 def test_shuffle_rules_path_parity(spark, tmp_path):
-    """Forcing the rules join off the broadcast path (the 10^8-host
-    design point where the rules table can't broadcast) must leave the
-    crawl order byte-identical."""
+    """With broadcasting off (the 10^8-host design point where the rules
+    table is past autoBroadcastJoinThreshold) the rules join plans as a
+    shuffle join, and the crawl order stays byte-identical."""
     d = str(tmp_path / "data3")
     gen_frontier(d, n_urls=600, n_hosts=8, n_seeds=300, seed=9, budget_range=(2, 5))
-    bc = run_crawl(spark, d, str(tmp_path / "sbc"), max_rounds=2)
-    sh = run_crawl(
-        spark, d, str(tmp_path / "ssh"), max_rounds=2, rules_broadcast_max=0
-    )
+    bc = run_crawl(spark, d, str(tmp_path / "sbc"), max_rounds=2, token_bucket=True)
+    assert _rules_joins(spark, d) == {"BroadcastHashJoin"}
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        sh = run_crawl(spark, d, str(tmp_path / "ssh"), max_rounds=2, token_bucket=True)
+        joins = _rules_joins(spark, d)
+    finally:
+        spark.conf.set(key, prev)
+    assert joins and "BroadcastHashJoin" not in joins
     assert _orders(spark, bc) == _orders(spark, sh)
     assert bc.counters() == sh.counters()
